@@ -15,38 +15,11 @@ object Bench {
       } catch { case _: Throwable => ("-1", "-1", "-1") }
     val (load1T0, load5T0, load15T0) = loadavg3()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config(graft.sources.Tables.NanosFlag, "true")
-        // small scan splits: the test corpora are single parquet files, and
-        // pure-map queries otherwise run at input-split parallelism (1 core)
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // Status-store retention is pure driver overhead in a headless
-        // sweep: even with the UI off, the app/SQL status listeners
-        // retain the last 1000 executions (each holding the FULL plan
-        // description string — 1000+-line plans here) plus 1000 jobs /
-        // 1000 stages / 100k tasks in driver heap. Across a 318-query ×
-        // 3-run sweep that is ~950 live plan graphs competing with
-        // execution memory and listener-bus throughput (the measured
-        // "in-sweep backlog" that inflated late queries 2-7× vs
-        // isolation). Keep a post-mortem handful; a long-lived
-        // production driver wants the same bound for the same reason.
-        .config("spark.sql.ui.retainedExecutions", "8")
-        .config("spark.ui.retainedJobs", "100")
-        .config("spark.ui.retainedStages", "200")
-        .config("spark.ui.retainedTasks", "2000")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = newSession()
-    // A failed query reports -1, not its elapsed time, and is excluded
-    // from the total — a broken query must be visible, not averaged away.
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    var spark = Session(cpus)
+    // A failed query reports -1, not its elapsed time: it is left out of
+    // the total and counted in n_failed, named in `failed` — a broken
+    // query must be visible, not averaged away.
     // Each query is timed as the min of N runs (default 2): the first run
     // pays Janino codegen + JIT, which at sf<=0.1 can dominate the query
     // itself and made per-round numbers swing ±40%.
@@ -76,7 +49,7 @@ object Bench {
         spark.stop()
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
-        spark = newSession()
+        spark = Session(cpus)
         sinceRecycle = 0
       }
       sinceRecycle += 1
@@ -130,6 +103,10 @@ object Bench {
       .map { case (k, v) => s"\"" + k + "\":" + ms(f(v)) }.mkString("{", ",", "}")
     val total = results.values.map(_._1).filter(_ >= 0).sum
     val totalMax = results.values.map(_._2).filter(_ >= 0).sum
+    val failed = results.collect { case (k, (t, _)) if t < 0 => k }
+      .toSeq.sorted
+    val failedFields = s""""n_failed":${failed.size},"failed":""" +
+      failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Detail line first (self-diagnosing: max >> min flags external load
     // or one-time work like codegen/index build), compact metric line last.
     // build.sbt suppresses sbt's trailing [success] line and forks run
@@ -143,7 +120,7 @@ object Bench {
     // null) — a consumer grabbing the first "total" line must get the
     // compact summary, never this truncation-prone map.
     val totalLine =
-      s"""{"metric":"total_full","value":${ms(total)},"unit":"sec","queries":${obj(_._1)},"load_start":$loadStart,"load_end":$loadEnd,"load1_t0":$load1T0,"load5_t0":$load5T0,"load15_t0":$load15T0,"sf":"$sfDir"}"""
+      s"""{"metric":"total_full","value":${ms(total)},"unit":"sec","queries":${obj(_._1)},$failedFields,"load_start":$loadStart,"load_end":$loadEnd,"load1_t0":$load1T0,"load5_t0":$load5T0,"load15_t0":$load15T0,"sf":"$sfDir"}"""
     // The parseable headline is the compact summary: headline total +
     // the slowest queries only; the complete per-query record is the
     // committed SPARK_GRAFT_BENCH_FILE artifact. It is printed FIRST
@@ -160,6 +137,7 @@ object Bench {
     val compactLine =
       s"""{"metric":"total","value":${ms(total)},"unit":"sec",""" +
       s""""value_max":${ms(totalMax)},"n_queries":${results.size},""" +
+      s"""$failedFields,""" +
       s""""queries":$slowest,"load_start":$loadStart,""" +
       s""""load_end":$loadEnd,"load1_t0":$load1T0,"load5_t0":$load5T0,""" +
       s""""load15_t0":$load15T0,"full":"$out","sf":"$sfDir"}"""

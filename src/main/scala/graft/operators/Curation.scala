@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import Rounding.{r4, r6, u6}
 
 /** Corpus-curation operators — the steps between "raw crawl" and
   * "training mix" that the reference's single-tenant store never needs
@@ -191,8 +192,8 @@ object Curation {
         coalesce(col("n_hit_shingles"), lit(0L)).as("n_hit_shingles"),
         coalesce(col("n_train_docs"), lit(0L)).as("n_train_docs"),
         coalesce(col("n_collisions"), lit(0L)).as("n_collisions"),
-        (floor(coalesce(col("n_hit_shingles"), lit(0L)).cast("double")
-          / col("n_shingles") * 10000 + lit(0.5)) / 10000)
+        r4(coalesce(col("n_hit_shingles"), lit(0L)).cast("double")
+          / col("n_shingles"))
           .as("contam_frac"))
       .orderBy(col("bench_id"))
   }
@@ -256,7 +257,6 @@ object Curation {
     * (graft.streaming.CurateStream).
     */
   private[graft] def qualityFilterOf(docs: DataFrame): DataFrame = {
-    def rnd4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val t = filter(split(col("text"), " "), x => x =!= "")
     val tl = filter(split(lower(col("text")), " "), x => x =!= "")
     val nWords = size(t)
@@ -267,18 +267,18 @@ object Curation {
     val g2 = zip_with(slice(t, lit(1), g2len), slice(t, lit(2), g2len),
       (a, b) => concat_ws(" ", a, b))
     val dup2 = when(size(g2) > 0,
-      floor((lit(1.0) - size(array_distinct(g2)).cast("double")
-        / size(g2)) * 10000 + 0.5) / 10000).otherwise(0.0)
+      r4(lit(1.0) - size(array_distinct(g2)).cast("double")
+        / size(g2))).otherwise(0.0)
     val toxicHits = size(filter(tl,
       x => array_contains(array(RefVocab.toxicLexicon.map(lit): _*), x)))
     val toxicScore = when(nWords >= RefVocab.toxicMinWords,
-      rnd4(least(lit(1.0), toxicHits * 10.0 / nWords))).otherwise(0.0)
+      r4(least(lit(1.0), toxicHits * 10.0 / nWords))).otherwise(0.0)
     val sig = docs
       .select(col("doc_id"),
         nWords.cast("int").as("n_words"),
         // 0-word guard: 0/0 is NaN, and Spark's floor path collapses it
         // to 0.0 while DuckDB propagates NaN — define the ratio as 0
-        when(nWords > 0, rnd4(stopHits.cast("double") / nWords))
+        when(nWords > 0, r4(stopHits.cast("double") / nWords))
           .otherwise(0.0).as("stopword_ratio"),
         dup2.as("dup_2gram_frac"),
         toxicScore.as("toxic_score"))
@@ -338,11 +338,11 @@ object Curation {
       .select(col("shard"), col("n_docs"), col("total_tokens"),
         expr(s"(greatest(total_tokens, 1) - 1) div $B + 1").as("n_bins"),
         col("straddle_docs"),
-        (floor(col("straddle_docs").cast("double") / col("n_docs")
-          * 10000 + lit(0.5)) / 10000).as("straddle_frac"),
-        (floor(col("total_tokens").cast("double")
-          / (expr(s"(greatest(total_tokens, 1) - 1) div $B + 1") * B)
-          * 10000 + lit(0.5)) / 10000).as("fill_ratio"))
+        r4(col("straddle_docs").cast("double") / col("n_docs"))
+          .as("straddle_frac"),
+        r4(col("total_tokens").cast("double")
+          / (expr(s"(greatest(total_tokens, 1) - 1) div $B + 1") * B))
+          .as("fill_ratio"))
       .orderBy(col("shard"))
   }
 
@@ -384,7 +384,6 @@ object Curation {
     * truth arm is the decontaminate join this filter would gate.
     */
   def bloomDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    def rnd6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val sh = Dedup.shingleRows(spark, dir)
     val isBench = pmod(col("doc_id"), lit(ContamMod)) === ContamSlot
     val benchG = sh.filter(isBench).select(col("g")).distinct()
@@ -411,11 +410,11 @@ object Curation {
       .crossJoin(truth.agg(count(lit(1)).as("n_true")))
       .select(col("n_train_shingles"), col("n_bench_shingles"),
         col("bits_set"),
-        rnd6(col("bits_set").cast("double") / BloomBits).as("load_factor"),
+        r6(col("bits_set").cast("double") / BloomBits).as("load_factor"),
         col("n_bloom_pos"), col("n_true"),
         (col("n_bloom_pos") - col("n_true")).as("n_false_pos"),
         when(col("n_train_shingles") > col("n_true"),
-          rnd6((col("n_bloom_pos") - col("n_true")).cast("double")
+          r6((col("n_bloom_pos") - col("n_true")).cast("double")
             / (col("n_train_shingles") - col("n_true"))))
           .otherwise(0.0).as("fp_rate"))
   }
@@ -501,7 +500,6 @@ object Curation {
     val lbl = CorpusStats.ccnetBuckets(spark, dir)
       .filter(col("bucket") =!= "middle")
       .select(col("doc_id").as("ld"), (col("bucket") === "head").as("pos"))
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     arms.join(held, Seq("doc_id"), "left_semi")
       .join(lbl, col("doc_id") === col("ld"))
       .groupBy(col("gate"))
@@ -512,11 +510,9 @@ object Curation {
         sum(when(!col("keep") && !col("pos"), 1L).otherwise(0L)).as("tn"))
       .select(col("gate"), col("tp"), col("fp"), col("fn"), col("tn"),
         when(col("tp") + col("fp") > 0,
-          r4(col("tp").cast("double") / (col("tp") + col("fp"))))
-          .as("prec"),
+          r4(col("tp").cast("double") / (col("tp") + col("fp")))).as("prec"),
         when(col("tp") + col("fn") > 0,
-          r4(col("tp").cast("double") / (col("tp") + col("fn"))))
-          .as("rec"),
+          r4(col("tp").cast("double") / (col("tp") + col("fn")))).as("rec"),
         when(lit(2) * col("tp") + col("fp") + col("fn") > 0,
           r4(lit(2.0) * col("tp").cast("double") /
             (lit(2) * col("tp") + col("fp") + col("fn"))))
@@ -538,7 +534,7 @@ object Curation {
       .select(col("doc_id").as("ld"), (col("bucket") === "head").as("pos"))
     classifierApply(spark, dir)
       .select(col("doc_id"),
-        floor(col("score") * 1000000 + lit(0.5)).cast("long").as("su"))
+        u6(col("score")).cast("long").as("su"))
       .join(held, Seq("doc_id"), "left_semi")
       .join(lbl, col("doc_id") === col("ld"))
       .select(col("doc_id"), col("su"), col("pos"))
@@ -558,7 +554,6 @@ object Curation {
     * doc_id, one 1-row agg.
     */
   def brierScore(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val d = (c: Column) => c.cast("decimal(38,0)")
     heldScored(spark, dir)
       .select(col("su"),
@@ -587,7 +582,6 @@ object Curation {
     * output.
     */
   def clfKs(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val d = (c: Column) => c.cast("decimal(38,0)")
     val g = heldScored(spark, dir)
       .groupBy(col("su"))
@@ -627,7 +621,6 @@ object Curation {
     * 9-row broadcast grid, one partial agg per threshold.
     */
   def prCurve(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val grid = broadcast(spark.range(1)
       .select(explode(array(PrThresholds.map(lit): _*)).as("tu")))
     heldScored(spark, dir)
@@ -641,11 +634,9 @@ object Curation {
       .select((col("tu").cast("double") / 1000000).as("threshold"),
         col("tp"), col("fp"), col("fn"),
         when(col("tp") + col("fp") > 0,
-          r4(col("tp").cast("double") / (col("tp") + col("fp"))))
-          .as("prec"),
+          r4(col("tp").cast("double") / (col("tp") + col("fp")))).as("prec"),
         when(col("tp") + col("fn") > 0,
-          r4(col("tp").cast("double") / (col("tp") + col("fn"))))
-          .as("rec"),
+          r4(col("tp").cast("double") / (col("tp") + col("fn")))).as("rec"),
         when(lit(2) * col("tp") + col("fp") + col("fn") > 0,
           r4(lit(2.0) * col("tp").cast("double") /
             (lit(2) * col("tp") + col("fp") + col("fn"))))
@@ -938,7 +929,6 @@ object Curation {
     * a claim, not a gap) with bounded cumulative windows.
     */
   def curationFunnel(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val tok = CorpusStats.docStats(spark, dir)
       .select(col("doc_id"), col("toks_ws").as("t"))
     val ag = curateManifest(spark, dir)
@@ -1056,7 +1046,6 @@ object Curation {
     * with a grid-sized cumulative.
     */
   def arrivalFunnel(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val tok = CorpusStats.docStats(spark, dir)
       .select(col("doc_id"), col("toks_ws").as("t"))
     val ag = arrivalReport(spark, dir)
@@ -1160,7 +1149,6 @@ object Curation {
     * doubles order identically in the oracle).
     */
   def labelQueue(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val scored = CorpusStats.docStats(spark, dir)
       .select(col("doc_id"), col("lang"), col("quality").as("score"))
     val thr = CorpusStats.qualityThresholds(spark, dir)
@@ -1290,7 +1278,7 @@ object Curation {
     * Degenerate docs (no words) carry bias only.
     */
   private def clfUnits: Seq[Column] = {
-    def r6u(c: Column) = floor(c * 1000000 + lit(0.5)).cast("long")
+    def r6u(c: Column) = u6(c).cast("long")
     val guard = col("n_words") > 0
     Seq(
       lit(1000000L).as("xu0"),
@@ -1458,7 +1446,6 @@ object Curation {
     * gateEval nullif convention).
     */
   def gateOverlap(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val h = qualityFilter(spark, dir)
       .select(col("doc_id"), col("keep").as("kh"))
     val c = classifierApply(spark, dir)
@@ -1481,8 +1468,7 @@ object Curation {
           when(col("n_a") + col("n_b") - col("n_both") > 0,
             r4(col("n_both").cast("double") /
               (col("n_a") + col("n_b") - col("n_both")))).as("jaccard"),
-          r4(col("n_agree").cast("double") / col("n_docs"))
-            .as("agree_rate"))
+          r4(col("n_agree").cast("double") / col("n_docs")).as("agree_rate"))
     arm("classifier~dsir", col("kc"), col("kd"))
       .unionAll(arm("heuristic~classifier", col("kh"), col("kc")))
       .unionAll(arm("heuristic~dsir", col("kh"), col("kd")))
@@ -1500,7 +1486,7 @@ object Curation {
       .select(
         least(floor(col("score") * ClfCalibBins), lit(ClfCalibBins - 1))
           .cast("int").as("bin"),
-        floor(col("score") * 1000000 + 0.5).cast("long").as("su"),
+        u6(col("score")).cast("long").as("su"),
         col("label"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), sum(col("su")).as("susum"),
@@ -1508,11 +1494,9 @@ object Curation {
       .select(col("bin"), col("n"),
         (floor(col("susum").cast("double") / col("n") + 0.5) / 1000000)
           .as("mean_score"),
-        (floor(col("npos").cast("double") / col("n") * 10000 + 0.5)
-          / 10000).as("pos_rate"))
+        r4(col("npos").cast("double") / col("n")).as("pos_rate"))
       .withColumn("gap",
-        floor(abs(col("mean_score") - col("pos_rate")) * 10000 + 0.5)
-          / 10000)
+        r4(abs(col("mean_score") - col("pos_rate"))))
       .orderBy(col("bin"))
   }
 
@@ -1563,7 +1547,6 @@ object Curation {
     * annotation drawn from it inherits the bias.
     */
   def sampleAudit(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val docs = Tables.documents(spark, dir)
     val grid = docs
       .select(md5(col("doc_id").cast("string")).as("h"), col("doc_id"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import Rounding.{r2, r4, r6, u4}
 
 /** Corpus deduplication family for the training-data pipeline.
   * (MinHash: Broder, "On the resemblance and containment of documents",
@@ -224,8 +225,8 @@ object Dedup {
       .groupBy(col("id_a"), col("id_b"), col("na"), col("nb"))
       .agg(count(lit(1)).as("inter"))
       .select(col("id_a"), col("id_b"),
-        (floor(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")) * 10000 + 0.5) / 10000)
+        r4(col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")))
           .as("jaccard"))
   }
 
@@ -236,8 +237,8 @@ object Dedup {
     * partition of the plain verify). Both id joins run through
     * [[SkewJoin.saltedJoin]]: each pair row carries a row-hash salt, the
     * shingle side replicates per salt, so a hot doc's pair set spreads
-    * `salts` ways. Result-identical to the plain verify (spec-pinned and
-    * probe-measured — tools.SkewProbe); the cost is `salts`× shingle
+    * `salts` ways. Result-identical to the plain verify (pinned in
+    * SkewJoinSpec); the cost is `salts`× shingle
     * replication, so this is the variant to pick when key_skew flags the
     * pair distribution, not the default.
     */
@@ -254,8 +255,8 @@ object Dedup {
     j2.groupBy(col("id_a"), col("id_b"), col("na"), col("nb"))
       .agg(count(lit(1)).as("inter"))
       .select(col("id_a"), col("id_b"),
-        (floor(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")) * 10000 + 0.5) / 10000)
+        r4(col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")))
           .as("jaccard"))
   }
 
@@ -269,8 +270,7 @@ object Dedup {
     * join keys on (id_b, g), so a hot doc's row mass already spreads
     * across its ~22 shingle keys there — salting it again would buy a
     * 22×-diluted skew at the price of another union + replication.
-    * Result-identical to the plain verify; spec-pinned, measured by
-    * tools.SkewProbe.
+    * Result-identical to the plain verify (pinned in SkewJoinSpec).
     */
   private[graft] def verifyJaccardSkewAware(cand: DataFrame, sh: DataFrame,
       salts: Int, hotThreshold: Long = 10000L): DataFrame = {
@@ -294,8 +294,8 @@ object Dedup {
       .groupBy(col("id_a"), col("id_b"), col("na"), col("nb"))
       .agg(count(lit(1)).as("inter"))
       .select(col("id_a"), col("id_b"),
-        (floor(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")) * 10000 + 0.5) / 10000)
+        r4(col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")))
           .as("jaccard"))
   }
 
@@ -328,7 +328,6 @@ object Dedup {
     * ≤log2 bins). Flat past the label pass.
     */
   def clusterSizeHist(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val g = dedupClusters(spark, dir)
       .groupBy(col("cluster")).agg(count(lit(1)).as("sz"))
       .select(col("sz"), expr(
@@ -341,8 +340,7 @@ object Dedup {
       .localCheckpoint(false))
     g.crossJoin(tot)
       .select(col("bin_lo"), col("n_clusters"), col("n_docs"),
-        r4(col("n_clusters").cast("double") / col("t"))
-          .as("cluster_share"))
+        r4(col("n_clusters").cast("double") / col("t")).as("cluster_share"))
       .orderBy(col("bin_lo"))
   }
 
@@ -362,7 +360,6 @@ object Dedup {
     * rollup is grid-sized.
     */
   def jaccardHist(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val sh = shingleRowsWithSize(spark, dir)
     val binned = verifyJaccard(bandCandidates(minhashBandedFrom(sh)), sh)
       .select(least(floor(col("jaccard") * 10).cast("int"), lit(9))
@@ -619,7 +616,6 @@ object Dedup {
     * then 4 band rows); no windows, no value-grid risk.
     */
   def bandStoreStats(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     bandStore(spark, dir)
       .groupBy(col("band"), col("key")).agg(count(lit(1)).as("n"))
       .groupBy(col("band"))
@@ -631,8 +627,7 @@ object Dedup {
           .as("over_rows"))
       .select(col("band"), col("n_buckets"), col("n_rows"),
         col("max_bucket"),
-        r4(col("n_rows").cast("double") / col("n_buckets"))
-          .as("mean_bucket"),
+        r4(col("n_rows").cast("double") / col("n_buckets")).as("mean_bucket"),
         col("n_over_cap"),
         r4(col("over_rows").cast("double") / col("n_rows"))
           .as("over_cap_row_share"))
@@ -949,8 +944,8 @@ object Dedup {
         sum(col("excess")).as("excess_tokens"))
       .crossJoin(broadcast(total))
       .select(col("cluster_size"), col("n_clusters"), col("n_tokens"),
-        (floor(col("n_tokens").cast("double") / col("corpus_tokens")
-          * 1000000 + lit(0.5)) / 1000000).as("token_share"),
+        r6(col("n_tokens").cast("double") / col("corpus_tokens"))
+          .as("token_share"),
         col("excess_tokens"))
       .orderBy(col("cluster_size"))
   }
@@ -993,7 +988,6 @@ object Dedup {
     val mid = (col("bin") + 0.5) / 10.0
     val theo = lit(1.0) -
       pow(lit(1.0) - pow(mid, LshCurveRows), LshCurveBands)
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     exact
       .withColumn("bin",
         least(floor(col("jaccard") * 10).cast("int"), lit(9)))
@@ -1002,8 +996,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_pairs"),
         sum(coalesce(col("hit"), lit(0L))).as("n_caught"))
       .select(col("bin"), col("n_pairs"), col("n_caught"),
-        r4(col("n_caught").cast("double") / col("n_pairs"))
-          .as("measured"),
+        r4(col("n_caught").cast("double") / col("n_pairs")).as("measured"),
         r4(theo).as("theoretical"))
       .orderBy(col("bin"))
   }
@@ -1057,8 +1050,8 @@ object Dedup {
       .groupBy(col("source"), col("id_a"), col("id_b"), col("na"), col("nb"))
       .agg(count(lit(1)).as("inter"))
       .select(col("source"), col("id_a"), col("id_b"),
-        (floor(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")) * 10000 + 0.5) / 10000)
+        r4(col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")))
           .as("jaccard"))
       .filter(col("jaccard") > 0)
   }
@@ -1096,7 +1089,7 @@ object Dedup {
       .join(d.select(col("doc_id").as("id_b"), col("source").as("src_b")),
         "id_b")
       .select(srcLo.as("src_lo"), srcHi.as("src_hi"),
-        floor(col("jaccard") * 10000 + lit(0.5)).cast("long").as("j4"))
+        u4(col("jaccard")).cast("long").as("j4"))
       .groupBy(col("src_lo"), col("src_hi"))
       .agg(count(lit(1)).as("n_pairs"), sum(col("j4")).as("jsum"))
       .select(col("src_lo"), col("src_hi"), col("n_pairs"),
@@ -1246,8 +1239,8 @@ object Dedup {
       .groupBy(col("id_a"), col("id_b"), col("na"), col("nb"))
       .agg(count(lit(1)).as("inter"))
       .select(col("id_a"), col("id_b"),
-        (floor(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")) * 10000 + 0.5) / 10000)
+        r4(col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")))
           .as("jaccard"))
       .filter(col("jaccard") >= LshCurveFloor)
     graft.sources.Sinks.writeSortedParquet(exact, path, Seq("id_a", "id_b"))
@@ -1288,7 +1281,6 @@ object Dedup {
     val lsh = dedupPairs(spark, dir)
       .select(col("id_a"), col("id_b"))
     val hit = lsh.join(exact, Seq("id_a", "id_b"), "left_semi")
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     exact.agg(count(lit(1)).as("n_exact"))
       .crossJoin(lsh.agg(count(lit(1)).as("n_lsh")))
       .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
@@ -1318,8 +1310,6 @@ object Dedup {
     * pass + a pair-key semi join and three 1-row aggregates.
     */
   def captureRecapture(spark: SparkSession, dir: String): DataFrame = {
-    def r2(c: Column) = floor(c * 100 + 0.5) / 100
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val mh = dedupPairs(spark, dir).select(col("id_a"), col("id_b"))
     val sh = dedupSimhash(spark, dir).select(col("id_a"), col("id_b"))
       .localCheckpoint(false) // feeds its count AND the overlap semi join
@@ -1406,7 +1396,6 @@ object Dedup {
     val exact = exactPairs(spark, dir)
       .filter(col("jaccard") >= JaccardThreshold)
       .select(col("id_a"), col("id_b")).localCheckpoint(false)
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     def arm(b: Int, r: Int): DataFrame = {
       val bandKeys = array((0 until b).map { i =>
         substring(md5(concat_ws("_",
@@ -1423,8 +1412,7 @@ object Dedup {
         .select(lit(b).as("n_bands"), lit(r).as("band_rows"),
           col("n_cand"), col("n_exact"), col("n_caught"),
           when(col("n_exact") > 0,
-            r4(col("n_caught").cast("double") / col("n_exact")))
-            .as("recall"),
+            r4(col("n_caught").cast("double") / col("n_exact"))).as("recall"),
           when(col("n_cand") > 0,
             r4(col("n_caught").cast("double") / col("n_cand")))
             .as("band_precision"))
@@ -1458,7 +1446,6 @@ object Dedup {
     * the pair-set artifact, so the drop lists compose without overlap.
     */
   def containmentDup(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     // run on the EXACT-DEDUP SURVIVOR set: identical copies are
     // dedup_exact's job, and keeping them here makes the inverted-index
     // fan-out quadratic in copy-group size for pairs that carry zero
@@ -1515,7 +1502,6 @@ object Dedup {
     * rollup.
     */
   def minhashError(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val sigs = minhashSigsOf(shingleRowsWithSize(spark, dir))
       .localCheckpoint(false) // feeds both pair sides
     val pairs = dedupPairs(spark, dir)
@@ -1527,7 +1513,7 @@ object Dedup {
     val matches = (0 until MINHASHES)
       .map(j => when(col(s"a$j") === col(s"b$j"), 1L).otherwise(0L))
       .reduce(_ + _)
-    val ju = floor(col("jaccard") * 10000 + 0.5).cast("long")
+    val ju = u4(col("jaccard")).cast("long")
     pairs.join(a, Seq("id_a")).join(b, Seq("id_b"))
       .select(matches.as("m"), ju.as("ju"))
       .agg(count(lit(1)).as("n_pairs"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Params
 import graft.sources.Tables
+import Rounding.r4
 
 /** Interaction-log operators over the `events` table (events ≈ the
   * reference's `interactions` table, user_id ≈ session, props ≈ the JSON
@@ -110,7 +111,6 @@ object Interactions {
     * DECIMAL, divided once in double, 4dp floor-rounded.
     */
   def effectivenessTrend(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     // the SAME runtime threshold the high_quality gate reads — a tuned
     // gate and its monitoring rollup must move together
     val minEff = Params.double(spark, "high_quality.min_effectiveness", 0.7)
@@ -131,10 +131,8 @@ object Interactions {
       .select(col("week"), col("n_interactions"), col("n_users"),
         r4(col("ovs").cast("double") / col("n_interactions"))
           .as("mean_overlap"),
-        r4(col("nh").cast("double") / col("n_interactions"))
-          .as("high_share"),
-        r4(col("np").cast("double") / col("n_interactions"))
-          .as("pass_share"))
+        r4(col("nh").cast("double") / col("n_interactions")).as("high_share"),
+        r4(col("np").cast("double") / col("n_interactions")).as("pass_share"))
       .orderBy(col("week"))
   }
 

@@ -23,24 +23,29 @@ object Par {
   def build(fs: Seq[() => DataFrame]): Seq[DataFrame] = {
     if (fs.sizeIs <= 1) return fs.map(_())
     // Each branch runs under its own job group so the FIRST failure can
-    // cancel the siblings' in-flight Spark jobs instead of blocking on
-    // the slowest branch's full runtime; sibling errors (usually the
-    // cancellations that follow) ride along as suppressed.
+    // cancel the siblings' running AND not-yet-submitted Spark jobs (a
+    // branch between checkpoint waves would otherwise launch its next
+    // wave) instead of blocking on the slowest branch's full runtime;
+    // sibling errors (usually the cancellations that follow) ride along
+    // as suppressed. A nested Par.build inside a branch sets its own
+    // group ids, so the outer cancellation does not reach its jobs.
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
     val base = s"graft-par-build-${java.util.UUID.randomUUID()}"
     val firstErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val results = new Array[Either[Throwable, DataFrame]](fs.size)
     val threads = fs.zipWithIndex.map { case (f, i) =>
       val t = new Thread(() => {
-        // group id only — the inherited thread-locals (job description
-        // from the bench, scheduler pool) stay as the caller set them
-        sc.setLocalProperty("spark.jobGroup.id", s"$base-$i")
         results(i) =
-          try Right(f())
-          catch { case e: Throwable =>
+          try {
+            // group id only — the inherited thread-locals (job
+            // description from the bench, scheduler pool) stay as the
+            // caller set them
+            sc.setLocalProperty("spark.jobGroup.id", s"$base-$i")
+            Right(f())
+          } catch { case e: Throwable =>
             if (firstErr.compareAndSet(null, e))
               fs.indices.filter(_ != i)
-                .foreach(j => sc.cancelJobGroup(s"$base-$j"))
+                .foreach(j => sc.cancelJobGroupAndFutureJobs(s"$base-$j"))
             Left(e)
           }
       }, s"graft-par-build-$i")

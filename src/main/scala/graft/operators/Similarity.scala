@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{cosineSim, dot}
 import graft.sources.Tables
+import Rounding.{r2, r4, r6, u4, u6}
 
 /** Vector similarity operators over the embeddings corpus.
   *
@@ -397,6 +398,44 @@ object Similarity {
         cosineSim(col("embedding"), col("qe")).as("s"), col("pr"))
   }
 
+  /** The recall@k audit join: the exact top-k (q_id, neighbor_id) left
+    * join an approximate arm's (aq, an). `an` is non-null exactly on a
+    * hit, so count(an) is the number of exact neighbours the arm found;
+    * the exact side is the authority, so a query the arm fully misses
+    * still counts, with 0 hits.
+    */
+  private def recallJoin(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.join(approx,
+      col("q_id") === col("aq") && col("neighbor_id") === col("an"), "left")
+
+  /** Per-query recall@k: `lead`, q_id, n_matched, recall = n_matched / k.
+    * The arm is broadcast: it is rank-window-bounded to ≤k rows/query, so
+    * the hint adds no new scale envelope (the query sample is the
+    * fixed-size eval gauge; see buildDenseTruth's broadcast(q)). Without
+    * it the planner size-estimates the windowed subplan from its scan
+    * bytes and plans a two-exchange sort-merge join.
+    */
+  private def recallPerQuery(exact: DataFrame, approx: DataFrame, k: Int,
+      lead: Column*): DataFrame =
+    recallJoin(exact, broadcast(approx))
+      .groupBy(col("q_id"))
+      .agg(count(col("an")).as("n_matched"))
+      .select(lead ++ Seq(col("q_id"), col("n_matched"),
+        r4(col("n_matched").cast("double") / k).as("recall")): _*)
+
+  /** Recall@k pooled over one named arm's queries: arm, n_queries,
+    * n_matched, recall = n_matched / (n_queries · k). The arm is
+    * broadcast, as in [[recallPerQuery]].
+    */
+  private def recallPerArm(name: String, exact: DataFrame,
+      approx: DataFrame, k: Int): DataFrame =
+    recallJoin(exact, broadcast(approx))
+      .agg(countDistinct(col("q_id")).as("n_queries"),
+        count(col("an")).as("n_matched"))
+      .select(lit(name).as("arm"), col("n_queries"), col("n_matched"),
+        r4(col("n_matched").cast("double") / (col("n_queries") * k))
+          .as("recall"))
+
   /** ann_recall: per-query recall@3 of the trained-IVF probe against the
     * exact brute-force top-3 — the standing eval every deployed ANN
     * index carries (FAISS benchmarks report exactly this curve). Joins
@@ -412,21 +451,8 @@ object Similarity {
     val exact = denseTruth(spark, dir)
       .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
       .select(col("q_id"), col("neighbor_id"))
-    // broadcast: the probe arm is rank-window-bounded to ≤3 rows/query —
-    // strictly smaller than the broadcast(probes) frame inside the arm
-    // itself, so this adds no new scale envelope (the query sample is the
-    // fixed-size eval gauge; see buildDenseTruth's broadcast(q)). Without
-    // the hint the planner size-estimates the windowed subplan from its
-    // scan bytes and plans a two-exchange sort-merge join.
-    val approx = broadcast(annIvfKmeans(spark, dir)
-      .select(col("q_id").as("aq"), col("neighbor_id").as("an")))
-    exact.join(approx,
-        col("q_id") === col("aq") && col("neighbor_id") === col("an"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(col("an")).as("n_matched"))
-      .select(col("q_id"), col("n_matched"),
-        (floor(col("n_matched").cast("double") / 3 * 10000 + 0.5) / 10000)
-          .as("recall"))
+    recallPerQuery(exact, annIvfKmeans(spark, dir)
+      .select(col("q_id").as("aq"), col("neighbor_id").as("an")), 3)
   }
 
   /** index_recall: the index-quality LEADERBOARD — recall@3 of every ANN
@@ -445,17 +471,10 @@ object Similarity {
     val exact = denseTruth(spark, dir)
       .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
       .select(col("q_id"), col("neighbor_id"))
-    def recallOf(name: String, approx: DataFrame): DataFrame = {
-      val a = approx.select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .groupBy(col("q_id"))
-        .agg(count(col("an")).as("n_matched"))
-        .select(lit(name).as("index_name"), col("q_id"), col("n_matched"),
-          (floor(col("n_matched").cast("double") / 3 * 10000 + 0.5) / 10000)
-            .as("recall"))
-    }
+    def recallOf(name: String, approx: DataFrame): DataFrame =
+      recallPerQuery(exact,
+        approx.select(col("q_id").as("aq"), col("neighbor_id").as("an")), 3,
+        lit(name).as("index_name"))
     // the four family arms BUILD in parallel (Par.build, guide §2.6):
     // each arm materializes its own checkpoint chain against its own
     // persisted index — serially those waves queued back-to-back
@@ -525,9 +544,7 @@ object Similarity {
         .withColumn("rank", row_number().over(wRank))
         .filter(col("rank") <= 3)
         .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      val rec = exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
+      val rec = recallJoin(exact, broadcast(a))
         .agg(count(lit(1)).as("n3"), count(col("an")).as("m"))
       val cost = probes.filter(col("pr") <= np)
         .join(broadcast(sizes), col("cid") === col("ccell"))
@@ -536,10 +553,8 @@ object Similarity {
       rec.crossJoin(cost)
         .select(lit(np).as("nprobe"),
           (col("n3") / 3).cast("long").as("n_queries"),
-          (floor(col("m").cast("double") / col("n3") * 10000 + 0.5)
-            / 10000).as("recall"),
-          (floor(col("tot").cast("double") / col("nq") * 100 + 0.5)
-            / 100).as("mean_scanned"))
+          r4(col("m").cast("double") / col("n3")).as("recall"),
+          r2(col("tot").cast("double") / col("nq")).as("mean_scanned"))
     }
     NprobeSweep.map(arm).reduce(_ unionByName _).orderBy(col("nprobe"))
   }
@@ -601,7 +616,6 @@ object Similarity {
     * posture — blocking recall is a statistical gauge.
     */
   def semdedupRecall(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val cells = ivfFlatIndex(spark, dir).lists
       .select(col("vec_id"), col("ccell"))
     val pairs = denseTruth(spark, dir)
@@ -619,8 +633,7 @@ object Similarity {
       .crossJoin(caught.agg(count(lit(1)).as("n_same_cell")))
       .select(col("n_pairs"), col("n_same_cell"),
         when(col("n_pairs") > 0,
-          r4(col("n_same_cell").cast("double") / col("n_pairs")))
-          .as("recall"))
+          r4(col("n_same_cell").cast("double") / col("n_pairs"))).as("recall"))
   }
 
   /** hubness result depth and the neighbor-list depth it counts over. */
@@ -651,8 +664,7 @@ object Similarity {
       .orderBy(col("n_lists").desc, col("neighbor_id"))
       .limit(HubTopK)
       .select(col("neighbor_id"), col("n_lists"),
-        (floor(col("n_lists").cast("double") / col("t") * 10000 + 0.5)
-          / 10000).as("share"))
+        r4(col("n_lists").cast("double") / col("t")).as("share"))
       .withColumn("rank", row_number().over(
         Window.orderBy(col("n_lists").desc, col("neighbor_id")))
         .cast("int"))
@@ -695,14 +707,13 @@ object Similarity {
     val a = lit(1.0) - col("cown")
     val b = lit(1.0) - col("cother")
     val sil = when(greatest(a, b) > 0,
-      floor((b - a) / greatest(a, b) * 1000000 + 0.5) / 1000000)
+      r6((b - a) / greatest(a, b)))
       .otherwise(lit(0.0))
     per.select(col("ccell"), sil.cast("decimal(18,6)").as("sil"))
       .groupBy(col("ccell"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("sil")).as("silsum"))
       .select(col("ccell"), col("n_vecs"),
-        (floor(col("silsum").cast("double") / col("n_vecs") * 10000 + 0.5)
-          / 10000).as("mean_sil"))
+        r4(col("silsum").cast("double") / col("n_vecs")).as("mean_sil"))
       .orderBy(col("ccell"))
   }
 
@@ -748,7 +759,7 @@ object Similarity {
     // the top-AvgK cosines, one mirrored double division
     val avgk = t.filter(col("rank_all") <= BitextAvgK)
       .select(col("q_id"),
-        floor(col("s") * 1000000 + 0.5).cast("long").as("su"))
+        u6(col("s")).cast("long").as("su"))
       .groupBy(col("q_id"))
       .agg((floor(sum(col("su")).cast("double") / BitextAvgK + 0.5)
         / 1000000).as("avgk"))
@@ -766,9 +777,9 @@ object Similarity {
       .join(avgk.select(col("q_id").as("y"), col("avgk").as("ay")), "y")
       .filter((col("ax") + col("ay")) / lit(2.0) > 0)
       .select(col("x"), col("y"),
-        (floor(col("s") * 1000000 + 0.5) / 1000000).as("cos"),
-        (floor((floor(col("s") * 1000000 + 0.5) / 1000000) /
-          ((col("ax") + col("ay")) / lit(2.0)) * 10000 + 0.5) / 10000)
+        r6(col("s")).as("cos"),
+        r4(r6(col("s")) /
+          ((col("ax") + col("ay")) / lit(2.0)))
           .as("margin"))
     scored.orderBy(col("margin").desc, col("x"), col("y"))
       .limit(BitextTopN)
@@ -799,7 +810,6 @@ object Similarity {
     * ≤[[DenseTruthDepth]] rows per query.
     */
   def centeredShift(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val pool = denseTruth(spark, dir)
       .filter(col("q_id") % 100 === 0 &&
         col("rank_all") <= DenseTruthDepth)
@@ -916,13 +926,12 @@ object Similarity {
       .select(posexplode(col("embedding")).as(Seq("i", "v")))
       .join(broadcast(st), "i")
       .select(col("i"),
-        (floor(err * err * 1000000 + 0.5) / 1000000)
+        r6(err * err)
           .cast("decimal(18,6)").as("e2"))
       .groupBy(col("i"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("e2")).as("se"))
       .select(col("i"), col("n_vecs"),
-        (floor(col("se").cast("double") / col("n_vecs") * 1000000 + 0.5)
-          / 1000000).as("mse"))
+        r6(col("se").cast("double") / col("n_vecs")).as("mse"))
       .orderBy(col("i"))
   }
 
@@ -975,15 +984,7 @@ object Similarity {
     val exact = denseTruth(spark, dir)
       .filter(col("q_id") % 100 === 0 && col("rank_all") <= SqTopK)
       .select(col("q_id"), col("neighbor_id"))
-    exact.join(broadcast(approx),
-        col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-        "left")
-      .groupBy(col("q_id"))
-      .agg(count(col("an")).as("n_matched"))
-      .select(col("q_id"), col("n_matched"),
-        (floor(col("n_matched").cast("double") / SqTopK * 10000 + 0.5)
-          / 10000).as("recall"))
-      .orderBy(col("q_id"))
+    recallPerQuery(exact, approx, SqTopK).orderBy(col("q_id"))
   }
 
   /** ann_sq: the IVF + scalar-quantizer SERVING arm (FAISS
@@ -1110,8 +1111,7 @@ object Similarity {
         col("mn").cast("double").as("mn"),
         col("mx").cast("double").as("mx"),
         col("lo"), col("hi"), col("n_clipped"),
-        (floor(col("n_clipped").cast("double") / col("n") * 10000 + 0.5)
-          / 10000).as("clip_share"))
+        r4(col("n_clipped").cast("double") / col("n")).as("clip_share"))
       .orderBy(col("i"))
   }
 
@@ -1136,7 +1136,7 @@ object Similarity {
     val st = sqStats(spark, dir)
     val b = sqRefitBounds(spark, dir)
     def e2(err: Column): Column =
-      (floor(err * err * 1000000 + 0.5) / 1000000).cast("decimal(18,6)")
+      r6(err * err).cast("decimal(18,6)")
     val joined = Tables
       .cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
       .select(posexplode(col("embedding")).as(Seq("i", "v")))
@@ -1158,7 +1158,7 @@ object Similarity {
         sum(when(col("inr"), col("eb"))).as("sebi"),
         sum(when(col("inr"), col("er"))).as("seri"))
     def mse(se: Column, n: Column): Column =
-      floor(se.cast("double") / n * 1000000 + 0.5) / 1000000
+      r6(se.cast("double") / n)
     val base = agg.select(lit("base").as("arm"), col("i"), col("n_vecs"),
       mse(col("seb"), col("n_vecs")).as("mse"), col("n_inrange"),
       mse(col("sebi"), col("n_inrange")).as("mse_inrange"))
@@ -1216,17 +1216,8 @@ object Similarity {
       .withColumn("rr", row_number().over(wR))
       .filter(col("rb") <= SqTopK || col("rr") <= SqTopK)
       .localCheckpoint(false) // k-bounded survivors; feeds both arm reads
-    def arm(name: String, rk: Column): DataFrame = {
-      val approx = ranked.filter(rk <= SqTopK).select(col("aq"), col("an"))
-      exact.join(broadcast(approx),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(countDistinct(col("q_id")).as("n_queries"),
-          count(col("an")).as("n_matched"))
-        .select(lit(name).as("arm"), col("n_queries"), col("n_matched"),
-          (floor(col("n_matched").cast("double") /
-            (col("n_queries") * SqTopK) * 10000 + 0.5) / 10000).as("recall"))
-    }
+    def arm(name: String, rk: Column): DataFrame = recallPerArm(name, exact,
+      ranked.filter(rk <= SqTopK).select(col("aq"), col("an")), SqTopK)
     arm("base", col("rb")).unionByName(arm("refit", col("rr")))
       .orderBy(col("arm"))
   }
@@ -1252,10 +1243,9 @@ object Similarity {
       count(lit(1)).as("n_cells"))
     cnt.crossJoin(broadcast(tot))
       .select(col("ccell"), col("n_vectors"),
-        (floor(col("n_vectors").cast("double") / col("total") * 1000000
-          + 0.5) / 1000000).as("share"),
-        (floor(col("n_vectors").cast("double") * col("n_cells")
-          / col("total") * 10000 + 0.5) / 10000).as("skew"))
+        r6(col("n_vectors").cast("double") / col("total")).as("share"),
+        r4(col("n_vectors").cast("double") * col("n_cells")
+          / col("total")).as("skew"))
       .withColumn("rank", row_number().over(
         Window.orderBy(col("n_vectors").desc, col("ccell"))))
   }
@@ -1368,10 +1358,9 @@ object Similarity {
       .select(col("ccell").cast("int").as("cell"),
         floor(col("ccell") / 2).cast("int").as("parent"),
         col("n_vectors"),
-        (floor(col("n_vectors").cast("double") / col("total") * 1000000
-          + 0.5) / 1000000).as("share"),
-        (floor(col("n_vectors").cast("double") * col("n_cells")
-          / col("total") * 10000 + 0.5) / 10000).as("skew"),
+        r6(col("n_vectors").cast("double") / col("total")).as("share"),
+        r4(col("n_vectors").cast("double") * col("n_cells")
+          / col("total")).as("skew"),
         col("fcell").isNotNull.as("was_split"))
       .withColumn("rank", row_number().over(
         Window.orderBy(col("n_vectors").desc, col("cell"))))
@@ -1402,9 +1391,7 @@ object Similarity {
     def arm(name: String, idx: IvfFlatIndex): DataFrame = {
       val a = annIvfKmeansProbe(spark, dir, idx)
         .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      val rec = exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
+      val rec = recallJoin(exact, broadcast(a))
         .agg(count(lit(1)).as("n3"), count(col("an")).as("m"))
       val sizes = idx.lists.groupBy(col("ccell"))
         .agg(count(lit(1)).as("csz"))
@@ -1421,10 +1408,8 @@ object Similarity {
       rec.crossJoin(cost)
         .select(lit(name).as("arm"),
           (col("n3") / 3).cast("long").as("n_queries"),
-          (floor(col("m").cast("double") / col("n3") * 10000 + 0.5)
-            / 10000).as("recall"),
-          (floor(col("tot").cast("double") / col("nq") * 100 + 0.5)
-            / 100).as("mean_scanned"))
+          r4(col("m").cast("double") / col("n3")).as("recall"),
+          r2(col("tot").cast("double") / col("nq")).as("mean_scanned"))
     }
     arm("base", ivfFlatIndex(spark, dir))
       .unionByName(arm("rebalanced", ivfRebalIndex(spark, dir)))
@@ -1474,8 +1459,8 @@ object Similarity {
           pick(1, 2).as("p50_scanned"),
           pick(19, 20).as("p95_scanned"),
           max(col("scanned")).as("max_scanned"),
-          (floor(sum(col("scanned")).cast("double") / max(col("n"))
-            * 100 + 0.5) / 100).as("mean_scanned"))
+          r2(sum(col("scanned")).cast("double") / max(col("n")))
+            .as("mean_scanned"))
         .select(lit(np).as("nprobe"), col("n_queries"),
           col("p50_scanned"), col("p95_scanned"), col("max_scanned"),
           col("mean_scanned"))
@@ -1498,7 +1483,6 @@ object Similarity {
     * lists), and the 2-row-per-query probe set; one global agg.
     */
   def annMissAudit(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val idx = ivfFlatIndex(spark, dir)
     val exact = denseTruth(spark, dir)
       .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
@@ -1518,9 +1502,7 @@ object Similarity {
       .select(col("pq"), col("cid").as("pcid"))
     val ncell = idx.lists
       .select(col("vec_id").as("nv"), col("ccell").as("ncell"))
-    exact
-      .join(approx, col("q_id") === col("aq") &&
-        col("neighbor_id") === col("an"), "left")
+    recallJoin(exact, approx)
       .join(ncell, col("neighbor_id") === col("nv"))
       .join(probes, col("q_id") === col("pq") &&
         col("ncell") === col("pcid"), "left")
@@ -1591,9 +1573,7 @@ object Similarity {
         .withColumn("rank", row_number().over(wRank))
         .filter(col("rank") <= 3)
         .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      val rec = exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
+      val rec = recallJoin(exact, broadcast(a))
         .agg(count(lit(1)).as("n3"), count(col("an")).as("m"))
       val scanned = probesAll.filter(col("pr") <= np)
         .join(broadcast(sizes), col("cid") === col("ccell"))
@@ -1605,12 +1585,11 @@ object Similarity {
         .groupBy()
         .agg(max(when(col("rn") === expr("(n - 1) * 19 div 20") + 1,
           col("scanned"))).as("p95"),
-          (floor(sum(col("scanned")).cast("double") / max(col("n"))
-            * 100 + 0.5) / 100).as("mean_scanned"))
+          r2(sum(col("scanned")).cast("double") / max(col("n")))
+            .as("mean_scanned"))
       rec.crossJoin(cost)
         .select(lit(np).as("nprobe"),
-          (floor(col("m").cast("double") / col("n3") * 10000 + 0.5)
-            / 10000).as("recall"),
+          r4(col("m").cast("double") / col("n3")).as("recall"),
           col("mean_scanned"), col("p95").as("p95_scanned"))
     }
     val arms = NprobeSweep.map(arm).reduce(_ unionByName _)
@@ -1659,15 +1638,15 @@ object Similarity {
       .select(col("bq"),
         (!(col("ni") === col("na") && col("na") === col("nb")))
           .as("changed"),
-        floor(col("ni").cast("double")
-          / (col("na") + col("nb") - col("ni")) * 10000 + 0.5)
+        u4(col("ni").cast("double")
+          / (col("na") + col("nb") - col("ni")))
           .cast("long").as("ju"))
     perQ.agg(count(lit(1)).as("n_queries"),
         sum(when(col("changed"), 1L).otherwise(0L)).as("n_changed"),
         sum(col("ju")).as("jus"))
       .select(col("n_queries"), col("n_changed"),
-        (floor(col("n_changed").cast("double") / col("n_queries")
-          * 10000 + 0.5) / 10000).as("change_rate"),
+        r4(col("n_changed").cast("double") / col("n_queries"))
+          .as("change_rate"),
         (floor(col("jus").cast("double") / col("n_queries") + 0.5)
           / 10000).as("mean_jaccard"))
   }
@@ -1694,7 +1673,7 @@ object Similarity {
     val sims = idx.lists
       .join(broadcast(idx.coarse), col("ccell") === col("cid"))
       .select(col("ccell"), col("vec_id"),
-        floor(cosineSim(col("embedding"), col("cvec")) * 1000000 + 0.5)
+        u6(cosineSim(col("embedding"), col("cvec")))
           .cast("long").as("su"))
     val means = sims.groupBy(col("ccell"))
       .agg(floor(sum(col("su")).cast("double") / count(lit(1)))
@@ -1720,14 +1699,13 @@ object Similarity {
     * cluster_terms' labels). Per cell: vector count, distinct labels,
     * majority label + its 4dp share, and the label-distribution
     * Shannon entropy (token_entropy's exact-integer form: H = ln n −
-    * Σ c·rnd6(ln c)/n — pure cells read entropy 0).
+    * Σ c·r6(ln c)/n — pure cells read entropy 0).
     *
     * Plan: pure index consumer — one vec_id equi-join of the inverted
     * lists against the embeddings' labels, one (cell × label)-bounded
     * partial agg feeding a cell-bounded argmax window + entropy agg.
     */
   def cellPurity(spark: SparkSession, dir: String): DataFrame = {
-    def rnd6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val cl = ivfFlatIndex(spark, dir).lists.select(col("vec_id"), col("ccell"))
       .join(Tables.embeddings(spark, dir).select(col("vec_id"), col("label")),
         "vec_id")
@@ -1743,14 +1721,13 @@ object Similarity {
     val agg = cl.groupBy(col("ccell"))
       .agg(sum(col("c")).as("n_vecs"),
         count(lit(1)).as("n_labels"),
-        sum(col("c") * rnd6(log(col("c").cast("double")))
+        sum(col("c") * r6(log(col("c").cast("double")))
           .cast("decimal(18,6)")).as("clogc"))
     agg.join(top, "ccell")
       .select(col("ccell"), col("n_vecs"), col("n_labels"),
         col("top_label"),
-        (floor(col("top_c").cast("double") / col("n_vecs") * 10000 + 0.5)
-          / 10000).as("top_share"),
-        rnd6(log(col("n_vecs").cast("double")) -
+        r4(col("top_c").cast("double") / col("n_vecs")).as("top_share"),
+        r6(log(col("n_vecs").cast("double")) -
           col("clogc").cast("double") / col("n_vecs")).as("entropy"))
       .orderBy(col("ccell"))
   }
@@ -2029,13 +2006,12 @@ object Similarity {
     sv.join(idx.codes, Seq("vec_id", "m"))
       .join(broadcast(idx.codebooks), Seq("m", "cid"))
       .select(col("m"),
-        (floor(sqDist(col("sub"), col("cvec")) * 1000000 + 0.5) / 1000000)
+        r6(sqDist(col("sub"), col("cvec")))
           .cast("decimal(18,6)").as("d2"))
       .groupBy(col("m"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("d2")).as("sd"))
       .select(col("m"), col("n_vecs"),
-        (floor(col("sd").cast("double") / col("n_vecs") * 1000000 + 0.5)
-          / 1000000).as("mse"))
+        r6(col("sd").cast("double") / col("n_vecs")).as("mse"))
       .orderBy(col("m"))
   }
 
@@ -2053,12 +2029,11 @@ object Similarity {
     sv.join(codes, Seq("vec_id", "m"))
       .join(broadcast(cb), Seq("m", "cid"))
       .select(col("m"),
-        (floor(sqDist(col("sub"), col("cvec")) * 1000000 + 0.5) / 1000000)
+        r6(sqDist(col("sub"), col("cvec")))
           .cast("decimal(18,6)").as("d2"))
       .groupBy(col("m"))
       .agg(count(lit(1)).as("n_vecs"),
-        (floor(sum(col("d2")).cast("double") / count(lit(1)) * 1000000
-          + 0.5) / 1000000).as("mse"))
+        r6(sum(col("d2")).cast("double") / count(lit(1))).as("mse"))
 
   /** The scoped-refresh PARTS: mse-before audit, the flagged worst-MSE
     * subspace (ties → smaller m; 1-row broadcast, the argmax rides an
@@ -2135,8 +2110,8 @@ object Similarity {
         col("fm").isNotNull.as("refreshed"),
         coalesce(col("mse_after_f"), col("mse_before")).as("mse_after"),
         coalesce(col("n_changed_f"), lit(0L)).as("n_changed"),
-        (floor(coalesce(col("n_changed_f"), lit(0L)).cast("double")
-          / col("n_vecs") * 10000 + 0.5) / 10000).as("churn"))
+        r4(coalesce(col("n_changed_f"), lit(0L)).cast("double")
+          / col("n_vecs")).as("churn"))
       .orderBy(col("m"))
   }
 
@@ -2179,18 +2154,9 @@ object Similarity {
     val codes2 = idx.codes
       .join(flag, col("m") === col("fm"), "left_anti")
       .unionByName(codesNew)
-    def arm(name: String, aIdx: PqIndex): DataFrame = {
-      val a = annPqProbe(spark, dir, aIdx)
-        .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(countDistinct(col("q_id")).as("n_queries"),
-          count(col("an")).as("n_matched"))
-        .select(lit(name).as("arm"), col("n_queries"), col("n_matched"),
-          (floor(col("n_matched").cast("double") /
-            (col("n_queries") * 3) * 10000 + 0.5) / 10000).as("recall"))
-    }
+    def arm(name: String, aIdx: PqIndex): DataFrame = recallPerArm(name,
+      exact, annPqProbe(spark, dir, aIdx)
+        .select(col("q_id").as("aq"), col("neighbor_id").as("an")), 3)
     arm("base", idx).unionByName(arm("refreshed", PqIndex(cb2, codes2)))
       .orderBy(col("arm"))
   }
@@ -2219,7 +2185,7 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("m"), col("sub").as("qsub"))
       .join(broadcast(idx.codebooks), "m")
       .select(col("q_id"), col("m"), col("cid"),
-        (floor(dot(col("qsub"), col("cvec")) * 1000000 + 0.5) / 1000000)
+        r6(dot(col("qsub"), col("cvec")))
           .cast("decimal(18,6)").as("part"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("s").desc, col("neighbor_id"))
@@ -2242,7 +2208,7 @@ object Similarity {
     * over RESIDUALS (x - centroid(cell(x)) — far less variance than raw
     * vectors), and per-vector codes carrying the owning cell, partitioned
     * by cell on disk (= the inverted lists). k defaults to the oracle-
-    * gated toy setting; tools.AnnProbe sweeps realistic cell counts.
+    * gated toy setting; realistic cell counts pass their own `k`.
     */
   def buildIvfPqIndex(spark: SparkSession, dir: String, path: String,
       k: Int = KMEANS_K, rotate: Boolean = false): Unit = {
@@ -2329,7 +2295,7 @@ object Similarity {
         .as(Seq("m", "qsub")))
     val adc = qsubRows.join(broadcast(idx.codebooks), "m")
       .select(col("q_id"), col("pcell"), col("m"), col("cid"),
-        (floor(dot(col("qsub"), col("cvec")) * 1000000 + 0.5) / 1000000)
+        r6(dot(col("qsub"), col("cvec")))
           .cast("decimal(18,6)").as("part"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("s").desc, col("neighbor_id"))
@@ -2534,8 +2500,8 @@ object Similarity {
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(when(col("norm") === 0, 1L).otherwise(0L)).as("zero_vecs"),
-        (floor(sum(col("norm").cast("decimal(18,6)")).cast("double")
-          / count(lit(1)) * 1000000 + lit(0.5)) / 1000000).as("mean_norm"),
+        r6(sum(col("norm").cast("decimal(18,6)")).cast("double")
+          / count(lit(1))).as("mean_norm"),
         min(col("norm")).as("min_norm"),
         max(col("norm")).as("max_norm"))
       .orderBy(col("label"))
@@ -2560,7 +2526,6 @@ object Similarity {
     * groupBy on 64 keys — map-shaped, no joins, no windows.
     */
   def dimVariance(spark: SparkSession, dir: String): DataFrame = {
-    def rnd6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val d = (c: Column) => c.cast("decimal(38,0)")
     Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
       .select(posexplode(col("embedding")).as(Seq("dim", "v")))
@@ -2572,8 +2537,8 @@ object Similarity {
         sum(d(col("vu") * col("vu"))).as("svv"),
         min(col("vu")).as("mn"), max(col("vu")).as("mx"))
       .select(col("dim"),
-        rnd6(col("sv").cast("double") / 10000000 / col("n")).as("mean"),
-        rnd6((d(col("n")) * col("svv") - col("sv") * col("sv"))
+        r6(col("sv").cast("double") / 10000000 / col("n")).as("mean"),
+        r6((d(col("n")) * col("svv") - col("sv") * col("sv"))
           .cast("double") / col("n").cast("double") / col("n")
           / 100000000000000L.toDouble).as("variance"),
         (col("mn").cast("double") / 10000000).as("min_v"),
@@ -2712,8 +2677,8 @@ object Similarity {
     val stats = j.select(col("source"), norm.as("nm"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_vecs"),
-        (floor(sum(col("nm").cast("decimal(18,6)")).cast("double")
-          / count(lit(1)) * 1000000 + lit(0.5)) / 1000000)
+        r6(sum(col("nm").cast("decimal(18,6)")).cast("double")
+          / count(lit(1)))
           .as("mean_norm"))
     stats.join(srcCent, Seq("source"))
       .crossJoin(broadcast(glob))
@@ -2853,8 +2818,7 @@ object Similarity {
       .groupBy(col("q_id"))
       .agg(count(col("an")).as("n_matched"), count(lit(1)).as("n_exact"))
       .select(col("q_id"), col("n_matched"), col("n_exact"),
-        (floor(col("n_matched").cast("double") / col("n_exact")
-          * 10000 + 0.5) / 10000).as("recall"))
+        r4(col("n_matched").cast("double") / col("n_exact")).as("recall"))
       .orderBy(col("q_id"))
   }
 
@@ -2874,8 +2838,7 @@ object Similarity {
       .groupBy(col("q_id"))
       .agg(count(col("ad")).as("n_matched"))
       .select(col("q_id"), col("n_matched"),
-        (floor(col("n_matched").cast("double") / MmrPool * 10000 + 0.5)
-          / 10000).as("recall"))
+        r4(col("n_matched").cast("double") / MmrPool).as("recall"))
   }
 
   /** mmr_rerank: Maximal Marginal Relevance (Carbonell & Goldstein,
@@ -2954,7 +2917,6 @@ object Similarity {
     */
   private def mmrGreedy(spark: SparkSession, dir: String,
       pool: DataFrame): DataFrame = {
-    def r6f(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val e = Tables.embeddings(spark, dir)
     val cand = pool.localCheckpoint(false) // feeds cc + every round
     val ca = cand.select(col("q_id").as("cq"), col("doc_id").as("d1"))
@@ -2981,7 +2943,7 @@ object Similarity {
     val wPick = Window.partitionBy(col("q_id"))
       .orderBy(col("score").desc, col("doc_id"))
     var sel = cand
-      .withColumn("score", r6f(lit(mmrLam) * col("simq")))
+      .withColumn("score", r6(lit(mmrLam) * col("simq")))
       .withColumn("rn", row_number().over(wPick))
       .filter(col("rn") === 1)
       .select(col("q_id"), col("doc_id"), col("simq"), lit(1).as("pick"))
@@ -2996,7 +2958,7 @@ object Similarity {
         .groupBy(col("q_id"), col("doc_id"), col("simq"))
         .agg(max(col("cs")).as("pen"))
       val selK = sel.union(pen
-        .withColumn("score", r6f(lit(mmrLam) * col("simq") -
+        .withColumn("score", r6(lit(mmrLam) * col("simq") -
           lit(mmrGam) * col("pen")))
         .withColumn("rn", row_number().over(wPick))
         .filter(col("rn") === 1)
@@ -3032,8 +2994,7 @@ object Similarity {
   private def dimMeanRows(e: DataFrame): DataFrame =
     e.select(posexplode(col("embedding")).as(Seq("d", "x")))
       .select(col("d"),
-        floor(col("x").cast("double") * 1000000 + lit(0.5)).cast("long")
-          .as("xu"))
+        u6(col("x").cast("double")).cast("long").as("xu"))
       .groupBy(col("d"))
       .agg(floor(sum(col("xu")).cast("double") / count(lit(1)) + lit(0.5))
         .cast("long").as("mu"))
@@ -3103,7 +3064,6 @@ object Similarity {
     * integers).
     */
   def pcaPower(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     pcaBasis(spark, dir)
       .select(col("dim"),
         r6(col("vu").cast("double") /
@@ -3120,8 +3080,8 @@ object Similarity {
     def norm6(df: DataFrame, v: Column, keep: Seq[Column]): DataFrame = {
       val m = broadcast(df.agg(max(abs(v)).as("mx")).localCheckpoint(false))
       df.crossJoin(m)
-        .select(keep :+ (floor(v.cast("double") / col("mx").cast("double")
-          * 1000000 + lit(0.5)).cast("long").as("v")): _*)
+        .select(keep :+ u6(v.cast("double") / col("mx").cast("double"))
+          .cast("long").as("v"): _*)
     }
     val d38 = (c: Column) => c.cast("decimal(38,0)")
     val e = Tables.cpuPartition(Tables.embeddings(spark, dir),
@@ -3132,7 +3092,7 @@ object Similarity {
     // re-eval trap: a deferred zip_with would re-run 64× per element)
     val centered = e.crossJoin(mu)
       .select(col("vec_id"), zip_with(col("embedding"), col("muarr"),
-        (x, m) => floor(x.cast("double") * 1000000 + lit(0.5)).cast("long")
+        (x, m) => u6(x.cast("double")).cast("long")
           - m).as("carr"))
       .localCheckpoint(false)
     // upper-triangle scatter: explode dims, then pair each dim with its
@@ -3183,8 +3143,8 @@ object Similarity {
       .groupBy(col("d")).agg(sum(col("c6") * col("vu")).as("w"))
     val rm = broadcast(rw.agg(max(abs(col("w"))).as("m")).localCheckpoint(false))
     val w6 = rw.crossJoin(rm)
-      .select(col("d"), floor(col("w").cast("double") /
-        col("m").cast("double") * 1000000 + lit(0.5)).cast("long")
+      .select(col("d"), u6(col("w").cast("double") /
+        col("m").cast("double")).cast("long")
         .as("w6"))
     val quad = broadcast(w6.join(v, col("d") === col("e"))
       .agg(sum(col("v") * col("w6")).as("quad6")).localCheckpoint(false))
@@ -3234,7 +3194,7 @@ object Similarity {
     val e = Tables.cpuPartition(Tables.embeddings(spark, dir),
       col("vec_id"))
     val cu = zip_with(col("embedding"), col("muarr"),
-      (x, m) => floor(x.cast("double") * 1000000 + lit(0.5)).cast("long")
+      (x, m) => u6(x.cast("double")).cast("long")
         - m)
     val pu = aggregate(zip_with(cu, col("vuarr"), (a, v) => a * v),
       lit(0L), (acc, x) => acc + x)
@@ -3297,7 +3257,7 @@ object Similarity {
     */
   private def bqBitsOf(v: Column): Column =
     zip_with(v, col("muarr"),
-      (x, m) => when(floor(x.cast("double") * 1000000 + lit(0.5))
+      (x, m) => when(u6(x.cast("double"))
         .cast("long") > m, 1L).otherwise(0L))
 
   def bqCodes(spark: SparkSession, dir: String): DataFrame = {
@@ -3443,14 +3403,11 @@ object Similarity {
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= BqK)
         .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
+      recallJoin(exact, broadcast(a))
         .agg(count(lit(1)).as("n3"), count(col("an")).as("m"))
         .select(lit(r).as("rerank_depth"),
           (col("n3") / 3).cast("long").as("n_queries"),
-          (floor(col("m").cast("double") / col("n3") * 10000 + 0.5)
-            / 10000).as("recall"))
+          r4(col("m").cast("double") / col("n3")).as("recall"))
     }
     BqRerankDepths.map(arm).reduce(_ unionByName _)
       .orderBy(col("rerank_depth"))
@@ -3468,15 +3425,7 @@ object Similarity {
       .select(col("q_id"), col("neighbor_id"))
     val a = bqTopk(spark, dir)
       .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-    exact.join(broadcast(a),
-        col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-        "left")
-      .groupBy(col("q_id"))
-      .agg(count(col("an")).as("n_matched"))
-      .select(col("q_id"), col("n_matched"),
-        (floor(col("n_matched").cast("double") / 3 * 10000 + 0.5) / 10000)
-          .as("recall"))
-      .orderBy(col("q_id"))
+    recallPerQuery(exact, a, 3).orderBy(col("q_id"))
   }
 
   // --- BQ re-threshold (the binary quantizer's maintenance loop:
@@ -3504,7 +3453,6 @@ object Similarity {
     * partial agg.
     */
   def bqBitBalance(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     bqCodes(spark, dir)
       .select(col("vec_id"), col("lo"), col("hi"),
         posexplode(sequence(lit(0), lit(63))).as(Seq("p", "d")))
@@ -3530,8 +3478,7 @@ object Similarity {
     val g = Tables.cpuPartition(Tables.embeddings(spark, dir),
         col("vec_id"))
       .select(posexplode(col("embedding")).as(Seq("d", "x")))
-      .select(col("d"), floor(col("x").cast("double") * 1000000
-        + lit(0.5)).cast("long").as("xu"))
+      .select(col("d"), u6(col("x").cast("double")).cast("long").as("xu"))
       .groupBy(col("d"), col("xu")).agg(count(lit(1)).as("c"))
     val wIn = Window.partitionBy(col("d")).orderBy(col("xu"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -3571,11 +3518,9 @@ object Similarity {
     * threshold table, one |dims|-row partial agg.
     */
   def bqRethreshold(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
       .select(posexplode(col("embedding")).as(Seq("d", "x")))
-      .select(col("d"), floor(col("x").cast("double") * 1000000
-        + lit(0.5)).cast("long").as("xu"))
+      .select(col("d"), u6(col("x").cast("double")).cast("long").as("xu"))
       .join(broadcast(bqThresholds(spark, dir)), Seq("d"))
       .groupBy(col("d"), col("mu"), col("new_thr"), col("flagged"))
       .agg(count(lit(1)).as("n_vecs"),
@@ -3590,8 +3535,7 @@ object Similarity {
         col("ones_after"),
         r4(col("ones_before").cast("double") / col("n_vecs"))
           .as("share_before"),
-        r4(col("ones_after").cast("double") / col("n_vecs"))
-          .as("share_after"),
+        r4(col("ones_after").cast("double") / col("n_vecs")).as("share_after"),
         col("n_flips"))
       .orderBy(col("d"))
   }
@@ -3619,8 +3563,7 @@ object Similarity {
       .select(col("vec_id"), posexplode(col("embedding"))
         .as(Seq("d", "x")))
       .select(col("vec_id"), col("d"),
-        floor(col("x").cast("double") * 1000000 + lit(0.5)).cast("long")
-          .as("xu"))
+        u6(col("x").cast("double")).cast("long").as("xu"))
       .join(broadcast(bqThresholds(spark, dir)), Seq("d"))
       .select(col("vec_id"), col("d"),
         when(col("xu") > col("new_thr"), 1L).otherwise(0L).as("b"))
@@ -3635,19 +3578,9 @@ object Similarity {
       // explode + threshold-table chain — including bqThresholds'
       // three corpus passes — re-ran per consumer
       .localCheckpoint(false)))
-    def arm(name: String, hams: DataFrame): DataFrame = {
-      val a = hammingTopK(hams, BqK)
-        .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(countDistinct(col("q_id")).as("n_queries"),
-          count(col("an")).as("n_matched"))
-        .select(lit(name).as("arm"), col("n_queries"), col("n_matched"),
-          (floor(col("n_matched").cast("double") /
-            (col("n_queries") * BqK) * 10000 + 0.5) / 10000)
-            .as("recall"))
-    }
+    def arm(name: String, hams: DataFrame): DataFrame = recallPerArm(name,
+      exact, hammingTopK(hams, BqK)
+        .select(col("q_id").as("aq"), col("neighbor_id").as("an")), BqK)
     arm("base", bqHams(spark, dir))
       .unionByName(arm("refit", bqHamsOf(refitCodes)))
       .orderBy(col("arm"))
@@ -3792,15 +3725,6 @@ object Similarity {
     * checkpointed truth read; no corpus rescans.
     */
   def appendRecall(spark: SparkSession, dir: String): DataFrame = {
-    def arm(exact: DataFrame, name: String, a: DataFrame): DataFrame =
-      exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(countDistinct(col("q_id")).as("n_queries"),
-          count(col("an")).as("n_matched"))
-        .select(lit(name).as("arm"), col("n_queries"), col("n_matched"),
-          (floor(col("n_matched").cast("double") /
-            (col("n_queries") * 3) * 10000 + 0.5) / 10000).as("recall"))
     // the truth read and the two walk arms BUILD in parallel
     // (Par.build): each walk's per-round checkpoint waves otherwise
     // queue back-to-back
@@ -3811,7 +3735,8 @@ object Similarity {
         .localCheckpoint(false), // feeds both arms
       () => walkTop3(spark, dir, appendedKnnGraph(spark, dir)),
       () => walkTop3(spark, dir, knnGraph(spark, dir))))
-    arm(exact, "appended", appW).unionByName(arm(exact, "rebuilt", rebW))
+    recallPerArm("appended", exact, appW, 3)
+      .unionByName(recallPerArm("rebuilt", exact, rebW, 3))
       .orderBy(col("arm"))
   }
 
@@ -3832,7 +3757,6 @@ object Similarity {
     * loop that acts on ivf_rebalance/sq_refit/bq_rethreshold.
     */
   def appendChurn(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val app = appendedKnnGraph(spark, dir)
     val edges = app.agg(count(lit(1)).as("n_edges"),
       sum(when(Dedup.isDelta(col("src")) || Dedup.isDelta(col("dst")),
@@ -3856,8 +3780,7 @@ object Similarity {
         r4(col("n_appended").cast("double") / col("n_edges"))
           .as("append_share"),
         col("n_queries"), col("n_changed"),
-        r4(col("n_changed").cast("double") / col("n_queries"))
-          .as("churn"))
+        r4(col("n_changed").cast("double") / col("n_queries")).as("churn"))
       .select(col("*"),
         (col("append_share") > AppShareMax ||
           col("churn") > AppChurnMax).as("rebuild_due"))
@@ -4043,19 +3966,16 @@ object Similarity {
       val a = vis.withColumn("rk", row_number().over(wQ))
         .filter(col("rk") <= 3)
         .select(col("q_id").as("aq"), col("vec_id").as("an"))
-      val rec = exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
+      val rec = recallJoin(exact, broadcast(a))
         .agg(countDistinct(col("q_id")).as("n_queries"),
           count(col("an")).as("n_matched"))
       val cost = vis.groupBy(col("q_id")).agg(count(lit(1)).as("nv"))
         .agg(sum(col("nv")).as("tv"), count(lit(1)).as("nq"))
       rec.crossJoin(cost)
         .select(lit(r).as("rounds"), col("n_queries"), col("n_matched"),
-          (floor(col("n_matched").cast("double") /
-            (col("n_queries") * 3) * 10000 + 0.5) / 10000).as("recall"),
-          (floor(col("tv").cast("double") / col("nq") * 100 + 0.5) / 100)
-            .as("mean_visited"))
+          r4(col("n_matched").cast("double") /
+            (col("n_queries") * 3)).as("recall"),
+          r2(col("tv").cast("double") / col("nq")).as("mean_visited"))
     }
     (1 to GraphRounds).map(arm).reduce(_ unionByName _)
       .orderBy(col("rounds"))
@@ -4099,7 +4019,6 @@ object Similarity {
     * Vamana's alpha-pruning does). Two partial aggs over the artifact.
     */
   def graphDegree(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val g = knnGraph(spark, dir)
       .groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(expr(
@@ -4124,15 +4043,8 @@ object Similarity {
     */
   def graphRecall(spark: SparkSession, dir: String): DataFrame = {
     def arm(exact: DataFrame, name: String, a: DataFrame): DataFrame =
-      exact.join(
-          broadcast(a.select(col("q_id").as("aq"), col("neighbor_id").as("an"))),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(countDistinct(col("q_id")).as("n_queries"),
-          count(col("an")).as("n_matched"))
-        .select(lit(name).as("arm"), col("n_queries"), col("n_matched"),
-          (floor(col("n_matched").cast("double") /
-            (col("n_queries") * 3) * 10000 + 0.5) / 10000).as("recall"))
+      recallPerArm(name, exact,
+        a.select(col("q_id").as("aq"), col("neighbor_id").as("an")), 3)
     // the truth read, the walk arm's per-round checkpoint waves and the
     // probe arm all BUILD in parallel (Par.build)
     val Seq(exact, gA, pA) = graft.operators.Par.build(Seq(
@@ -4225,8 +4137,8 @@ object Similarity {
       .groupBy(col("d"))
       .agg(count(lit(1)).as("n_queries"), sum(col("nm")).as("n_matched"))
       .select(col("d"), col("n_queries"), col("n_matched"),
-        (floor(col("n_matched").cast("double") /
-          (col("n_queries") * BqK) * 10000 + 0.5) / 10000).as("recall"))
+        r4(col("n_matched").cast("double") /
+          (col("n_queries") * BqK)).as("recall"))
       .orderBy(col("d"))
   }
 
@@ -4271,14 +4183,11 @@ object Similarity {
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= BqK)
         .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
+      recallJoin(exact, broadcast(a))
         .agg(count(lit(1)).as("n3"), count(col("an")).as("m"))
         .select(lit(r).as("rerank_depth"),
           (col("n3") / 3).cast("long").as("n_queries"),
-          (floor(col("m").cast("double") / col("n3") * 10000 + 0.5)
-            / 10000).as("recall"))
+          r4(col("m").cast("double") / col("n3")).as("recall"))
     }
     BqRerankDepths.map(arm).reduce(_ unionByName _)
       .orderBy(col("rerank_depth"))

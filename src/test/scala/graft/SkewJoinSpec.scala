@@ -34,7 +34,7 @@ class SkewJoinSpec extends SparkSpecBase {
     import graft.operators.Dedup
     import org.apache.spark.sql.expressions.Window
     // a hot doc (1) pairing with everything, plus cold pairs — the
-    // SkewProbe shape at spec scale, over REAL shingle rows
+    // hot-key boilerplate shape at spec scale, over REAL shingle rows
     val texts = Seq(
       1L -> "alpha bravo charlie delta echo foxtrot golf hotel india",
       2L -> "alpha bravo charlie delta echo foxtrot golf hotel juliet",

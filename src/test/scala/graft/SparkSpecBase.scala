@@ -25,7 +25,7 @@ trait SparkSpecBase extends AnyFunSuite
   /** The session is shared across every suite in the JVM; without this,
     * localCheckpoint blocks and unreclaimed broadcasts pile up across
     * ~100 tests and late suites run minutes-slow (same churn measured
-    * and fixed in Bench/Probe). Runs after each suite, between tests'
+    * and fixed in Bench). Runs after each suite, between tests'
     * own lineage: checkpointed frames are only consumed inside the test
     * that made them.
     */
